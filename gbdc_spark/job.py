@@ -54,7 +54,9 @@ def main(argv: list[str] | None = None) -> int:
                     help="anti-join committed keys and append only the delta")
     ap.add_argument("--local-cores", type=int, default=None)
     ap.add_argument("--size-bucketing", action="store_true",
-                    help="stratified striping by n_tok before extraction")
+                    help="stripe docs over partitions by n_tok before extraction "
+                         "(partitioning.size_bucketed: probe jobs plus a shuffle); "
+                         "off by default, extraction then keeps the input's splits")
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -74,6 +76,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.size_bucketing:
         seqs = pt.size_bucketed(seqs, "n_tok")
 
+    # extraction does not stripe on its own, so a striped input is
+    # striped exactly once
     features = feature_pipeline(seqs, snaps)
     # runtime_s is measured wall-clock -> excluded from the drift hash
     entry = cp.commit(

@@ -104,6 +104,29 @@ def partition_metrics(df: DataFrame, cols: list[str] | None = None) -> DataFrame
     )
 
 
+# partition_metrics' output schema: its metrics tables are read back
+# with it, so the read runs no schema-inference job
+_METRICS_SCHEMA = "partition_id int, n_rows bigint, hash_fold decimal(38,0)"
+
+
+def _write_metrics(
+    written: DataFrame, metrics_dir: str, hash_cols: list[str] | None
+) -> tuple[int, int, int]:
+    """Write ``partition_metrics(written)`` to ``metrics_dir`` and fold
+    ``(n_rows, content_hash, n_partitions)`` from the small table just
+    written — one row per partition — instead of re-hashing the data."""
+    partition_metrics(written, hash_cols).write.mode("errorifexists").parquet(metrics_dir)
+    rows = (
+        written.sparkSession.read.schema(_METRICS_SCHEMA)
+        .parquet(metrics_dir)
+        .select("n_rows", "hash_fold")
+        .collect()
+    )
+    n_rows = sum(r["n_rows"] for r in rows)
+    fold = sum(int(r["hash_fold"]) for r in rows) % _FOLD_MOD
+    return n_rows, fold, len(rows)
+
+
 class SnapshotConflictError(RuntimeError):
     """Another writer published this snapshot id first (single-writer
     assumption violated).  The loser's data dir is an orphan —
@@ -234,26 +257,21 @@ def commit(
 
     df.write.mode("errorifexists").parquet(data_dir)
 
-    written = spark.read.parquet(data_dir)
-    pm = partition_metrics(written, hash_cols)
+    # read back with the schema just written: no schema-inference job
+    written = spark.read.schema(df.schema).parquet(data_dir)
     # metrics dir carries the data dir's unique suffix and is written
     # errorifexists: like the data dir, a racing writer that minted the
     # same sid can never clobber the winner's lineage metrics (the
     # manifest row records which metrics dir belongs to the snapshot)
     metrics_dir = os.path.join(base, "_metrics", os.path.basename(data_dir))
-    pm.write.mode("errorifexists").parquet(metrics_dir)
-    agg = pm.agg(
-        F.coalesce(F.sum("n_rows"), F.lit(0)).alias("n"),
-        F.coalesce(F.sum("hash_fold"), F.lit(0).cast("decimal(38,0)")).alias("fold"),
-        F.count("*").alias("parts"),
-    ).first()
+    n_rows, fold, parts = _write_metrics(written, metrics_dir, hash_cols)
 
     entry = {
         "snapshot_id": sid,
         "committed_at": time.time(),
-        "n_rows": int(agg["n"]),
-        "n_partitions": int(agg["parts"]),
-        "content_hash": int(agg["fold"]) % _FOLD_MOD,
+        "n_rows": n_rows,
+        "n_partitions": parts,
+        "content_hash": fold,
         "keys": keys,
         "data_dir": data_dir,
         "metrics_dir": metrics_dir,
@@ -395,21 +413,15 @@ def compact(
     data_dir = os.path.join(base, "data", f"snapshot={sid}-{uuid.uuid4().hex[:12]}")
     df.write.mode("errorifexists").parquet(data_dir)
 
-    written = spark.read.parquet(data_dir)
-    pm = partition_metrics(written, hash_cols)
-    agg = pm.agg(
-        F.coalesce(F.sum("n_rows"), F.lit(0)).alias("n"),
-        F.coalesce(F.sum("hash_fold"), F.lit(0).cast("decimal(38,0)")).alias("fold"),
-        F.count("*").alias("parts"),
-    ).first()
-    got_rows, got_hash = int(agg["n"]), int(agg["fold"]) % _FOLD_MOD
+    written = spark.read.schema(df.schema).parquet(data_dir)
+    metrics_dir = os.path.join(base, "_metrics", os.path.basename(data_dir))
+    got_rows, got_hash, parts = _write_metrics(written, metrics_dir, hash_cols)
     if got_rows != expected_rows or got_hash != expected_hash:
+        # the new data and metrics dirs are orphans clean_orphans reclaims
         raise RuntimeError(
             f"compaction verify failed: rows {got_rows} vs {expected_rows}, "
             f"hash {got_hash} vs {expected_hash} — manifest untouched"
         )
-    metrics_dir = os.path.join(base, "_metrics", os.path.basename(data_dir))
-    pm.write.mode("errorifexists").parquet(metrics_dir)
 
     # replaces must be TRANSITIVE: a live compaction row may itself be
     # hiding earlier superseded jsons whose cleanup crashed midway; if
@@ -421,7 +433,7 @@ def compact(
         "snapshot_id": sid,
         "committed_at": time.time(),
         "n_rows": got_rows,
-        "n_partitions": int(agg["parts"]),
+        "n_partitions": parts,
         "content_hash": got_hash,
         "keys": entries[-1]["keys"],
         "data_dir": data_dir,

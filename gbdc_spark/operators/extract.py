@@ -139,8 +139,9 @@ def with_gate_features(df: DataFrame, tokens_col: str = "tokens",
     of silently all-NaN features).
 
     Gate analysis is stateful and sequential per doc (GateAnalyzer.h BFS +
-    occurrence-list mutation); it distributes ACROSS docs.  Giant docs
-    straggle, so by default (``rebalance="auto"``) a one-pass quantile
+    occurrence-list mutation); it distributes ACROSS docs.  Its cost is
+    super-linear in doc size, so giant docs straggle, and by default
+    (``rebalance="auto"``, unlike ``extract_all``) a one-pass quantile
     probe stripes skewed corpora with ``partitioning.size_bucketed``
     and leaves uniform ones untouched; pass False to pin the incoming
     partitioning or True to force the stripe.
@@ -321,16 +322,20 @@ def _apply_rebalance(df: DataFrame, rebalance: bool | str) -> DataFrame:
 
 
 def extract_all(df: DataFrame, tokens_col: str = "tokens",
-                rebalance: bool | str = "auto") -> DataFrame:
+                rebalance: bool | str = False) -> DataFrame:
     """Fused per-doc extraction: gbdhash + isohash + 58 base features +
     runtime_s + status in one mapInPandas stage (one Arrow crossing).
 
-    ``rebalance="auto"`` (default): a Zipf-heavy ``n_tok`` distribution
-    triggers ``partitioning.size_bucketed`` striping so one partition
-    doesn't draw several giant docs (north_rule: explicit skew handling
-    for heavy sources); near-uniform corpora skip the shuffle entirely
-    after a single cheap quantile scan.  Streaming inputs skip the
-    probe (no batch quantiles mid-stream)."""
+    By default (``rebalance=False``) extraction runs on its input's own
+    partitioning — the scan's byte-bounded file splits, or
+    ``ensure_parallelism``'s split for a single-file source — so
+    building the plan launches no Spark job and adds no shuffle.
+    Striping is the caller's explicit choice (north_rule: explicit skew
+    handling for heavy sources): ``rebalance=True`` always stripes with
+    ``partitioning.size_bucketed``; ``"auto"`` runs the
+    ``partitioning.maybe_size_rebalance`` quantile probe and stripes
+    only a Zipf-heavy ``n_tok`` distribution.  Striping moves rows
+    between partitions and never changes a value."""
     df = _apply_rebalance(df, rebalance)
     out_schema = _extract_all_schema(df.schema)
     n_feat = len(BASE_FEATURES_NAMES)

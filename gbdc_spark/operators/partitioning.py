@@ -13,6 +13,12 @@ Three tools, composable with any stage:
   200-doc partition (SURVEY.md §4.2.3 — the distributed analogue of the
   reference's per-file timeout, ResourceLimits.h:95-201).
 
+``heavy_hitters``, ``size_bucketed`` and ``maybe_size_rebalance`` run
+probe jobs while the plan is built, so none runs unless the caller
+asks: per-doc extraction (``extract.extract_all``) keeps its input's
+own partitioning — the scan's byte-bounded file splits — by default,
+and striping is opted into with ``rebalance=True``/``"auto"`` or
+``gbdc_spark.job --size-bucketing``.
 AQE's skew-join splitting (enabled in session.py) is the backstop for
 plain joins; these helpers cover the cogroup/applyInPandas paths AQE
 cannot rewrite.
@@ -108,7 +114,6 @@ def salted_join(
 
 
 _PREIMAGE_CACHE: dict[int, dict[int, int]] = {}
-_PROBE_CACHE: dict[tuple[int, str], list[float] | None] = {}
 
 
 def _hash_preimages(spark, partitions: int) -> dict[int, int]:
@@ -260,14 +265,16 @@ def maybe_size_rebalance(
     sample_frac: float = 0.1,
 ) -> DataFrame:
     """Shuffle via ``size_bucketed`` ONLY when the size distribution is
-    actually skewed — the auto gate the per-doc extraction stages use by
-    default.
+    actually skewed — the ``rebalance="auto"`` gate of the per-doc
+    extraction stages (the default of ``with_gate_features``, whose cost
+    is super-linear in doc size; an opt-in for ``extract_all``).
 
     One approxQuantile pass over a seeded 10% sample yields both the
     skew decision (p99 / p50 > ``skew_ratio``) and the stratum cutoffs,
     so triggering costs no second pass — and because ``size_col`` may be
     a derived expression (e.g. the tokenizer's n_tok), sampling keeps
-    the probe from re-running the derivation over the full corpus.  A
+    the probe from re-running the derivation over the full corpus.  The
+    probe is a Spark job run while the plan is built, on every call.  A
     near-uniform corpus — like the driver's documents tables — returns
     ``df`` untouched: no shuffle, identical plan.  No-ops when
     ``size_col`` OR ``key`` is absent (an auto gate must degrade to
@@ -278,22 +285,6 @@ def maybe_size_rebalance(
     """
     if size_col not in df.columns or key not in df.columns or df.isStreaming:
         return df
-    # memoize the probe per (logical plan, size_col) for the session:
-    # repeated pipelines over the same table (bench loops, multi-query
-    # drivers) pay the quantile scan once, not per query.  Keyed on
-    # Catalyst's normalized semanticHash, so a different path/expression
-    # is a different entry; data mutated in place mid-session would go
-    # stale — acceptable for a partitioning heuristic (values are
-    # invariant either way).
-    try:
-        cache_key = (df._jdf.queryExecution().logical().semanticHash(), size_col)
-    except Exception:  # noqa: BLE001 — cache is best-effort
-        cache_key = None
-    if cache_key is not None and cache_key in _PROBE_CACHE:
-        cuts = _PROBE_CACHE[cache_key]
-        if cuts is None:
-            return df
-        return size_bucketed(df, size_col, key, partitions, strata, cuts=cuts)
     probe = df.sample(fraction=sample_frac, seed=7) if sample_frac < 1.0 else df
     qs = sorted({i / strata for i in range(1, strata)} | {0.5, 0.99})
     vals = probe.approxQuantile(size_col, qs, 0.001)
@@ -306,12 +297,8 @@ def maybe_size_rebalance(
     # denominator to 1 so that corpus rebalances instead of slipping
     # through; only an all-zero profile (p99 <= 0) is a true no-op
     if p99 <= 0 or p99 / max(p50, 1.0) < skew_ratio:
-        if cache_key is not None:
-            _PROBE_CACHE[cache_key] = None
         return df
     cuts = [byq[q] for q in [i / strata for i in range(1, strata)]]
-    if cache_key is not None:
-        _PROBE_CACHE[cache_key] = cuts
     return size_bucketed(df, size_col, key, partitions, strata, cuts=cuts)
 
 

@@ -4,6 +4,7 @@ runtime/sentinel dict shape, cnf2kis file generation self-consistency."""
 
 import gzip
 import lzma
+import os
 import subprocess
 import sys
 
@@ -17,6 +18,7 @@ CNF = "c comment\np cnf 3 4\n1 2 0\n-1 3 0\n2 -3 0\n-2 0\n"
 WCNF_OLD = "c w\np wcnf 3 4 10\n10 1 2 0\n3 -1 3 0\n10 2 -3 0\n1 -2 0\n"
 WCNF_NEW = "h 1 2 0\n3 -1 3 0\nh 2 -3 0\n1 -2 0\n"
 OPB = "* comment\nmin: 2 x1 -3 x2;\n+1 x1 +2 x2 >= 2;\n-1 x1 +1 x3 = 0;\n"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
@@ -147,7 +149,7 @@ def test_cli_tools(files, tmp_path):
     def run(*argv):
         return subprocess.run(
             [sys.executable, "-m", "gbdc_spark.cli", *argv],
-            capture_output=True, text=True, cwd="/root/repo",
+            capture_output=True, text=True, cwd=ROOT,
         )
 
     r = run("gbdhash", files["a.cnf"])

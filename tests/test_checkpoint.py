@@ -3,6 +3,7 @@
 * resume after a partial run appends exactly the missing rows
 * content hash is partitioning/order independent (cluster-size invariant)
 * per-partition metrics reconcile with the manifest totals
+* commit folds its totals from the metrics it wrote, never re-hashing
 * a torn commit (data dir without manifest row) is invisible to readers
 """
 
@@ -10,6 +11,7 @@ import os
 import shutil
 
 import pytest
+from jobaudit import jobs_during
 from pyspark.sql import functions as F
 
 from gbdc_spark.operators import checkpoint as cp
@@ -67,6 +69,29 @@ def test_partition_metrics_reconcile(spark, base):
     fold = sum(int(r["hash_fold"]) for r in rows) % (1 << 64)
     # sum of per-partition folds == manifest content hash == direct hash
     assert fold == entry["content_hash"] == cp.content_hash(_mkdf(spark, 0, 200))
+
+
+def test_commit_folds_totals_from_written_metrics(spark, base, tmp_path):
+    df = _mkdf(spark, 0, 300).repartition(5)
+    hash_cols = ["doc_id"]
+    n_commit, entry = jobs_during(
+        spark, lambda: cp.commit(df, base, keys=["doc_id"], hash_cols=hash_cols),
+        retry=False,
+    )
+    table = cp.read_table(spark, base)
+    assert entry["n_rows"] == 300
+    assert entry["content_hash"] == cp.content_hash(table, hash_cols)
+    assert entry["n_partitions"] == spark.read.parquet(entry["metrics_dir"]).count()
+    # commit costs its two writes plus one small read of the metrics:
+    # no schema-inference read of the data, no second hash pass over it
+    data, metrics = str(tmp_path / "data"), str(tmp_path / "metrics")
+    n_data, _ = jobs_during(spark, lambda: df.write.parquet(data), retry=False)
+    written = spark.read.schema(df.schema).parquet(data)
+    n_metrics, _ = jobs_during(
+        spark, lambda: cp.partition_metrics(written, hash_cols).write.parquet(metrics),
+        retry=False,
+    )
+    assert n_commit <= n_data + n_metrics + 1
 
 
 def test_torn_commit_is_invisible_and_never_blocks(spark, base):

@@ -165,7 +165,7 @@ def test_extract_all_values_unchanged_by_rebalance(spark):
 
 def test_maybe_size_rebalance_noop_when_key_absent(spark):
     # auto-gate must degrade to identity on a renamed key column, not
-    # raise from inside size_bucketed (extract stages default to auto)
+    # raise from inside size_bucketed (with_gate_features defaults to auto)
     from gbdc_spark.operators.partitioning import maybe_size_rebalance
 
     df = spark.range(0, 2000).select(
